@@ -667,9 +667,11 @@ object Dedup {
     * the two DRIVER JOBS every invocation of [[bloomContamination]]
     * paid (a full count action + the bloomFilter aggregate) even though
     * both are constants of the (test corpus generation, shingleN, fpp):
-    * the contamStateBloom discipline applied to the ad-hoc path. Keyed
-    * by the caller's `memoTag`, which must carry the test source's
-    * generation fingerprint plus the sketch parameters. */
+    * the contamStateBloom discipline applied to the ad-hoc path. The
+    * key is composite: the caller's `memoTag` (which must carry the test
+    * source's generation fingerprint) + `shingleN` + `fpp` + the test
+    * shingle plan's semantic hash, so two callers reusing one tag over
+    * different test splits never share a filter. */
   private val testBloomMemo = new java.util.LinkedHashMap[
       String, (Long, org.apache.spark.util.sketch.BloomFilter)](16, 0.75f, true) {
     override def removeEldestEntry(

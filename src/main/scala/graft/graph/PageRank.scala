@@ -167,7 +167,7 @@ object PageRank {
     // deduped, but the ANALYZED tree would still ride into each
     // reference and Catalyst analysis of the composed refresh plan
     // dominated the warm runtime (measured ~10 s of a 13 s refresh at
-    // sf0.1; graft.ProfPageRank). After truncation each reference is
+    // sf0.1). After truncation each reference is
     // one LogicalRDD leaf.
     val incE = graft.ops.CacheOnce.swapTruncated(s"ipr-inc-edges$memoTag", incEdges)
     // Merged out-degrees: the state side's aggregate rides the bucketing

@@ -78,7 +78,7 @@ object CacheOnce {
     * full analyzed tree, so the driver's Catalyst analysis cost grows
     * as (tree size × references), and a 2-superstep refresh over a
     * deep LSH-verify feed spends 10+ s in plan analysis while its
-    * tasks run ~1 s (measured; graft.ProfPageRank). Here the frame is
+    * tasks run ~1 s (measured). Here the frame is
     * materialized once ([[Materialize.eagerDurable]] — a LogicalRDD
     * leaf) and memoized under the same (name, semantic hash) key, so
     * repeat calls return the truncated frame without re-executing, and

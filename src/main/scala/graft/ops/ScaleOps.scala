@@ -121,8 +121,7 @@ object ScaleOps {
                         numBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = new java.io.File(wh, table)
+    val loc = new java.io.File(StateTable.warehouseRoot(spark), table)
     if (loc.exists()) deleteLocal(loc)
     val sc = if (sortCols.nonEmpty) sortCols else keys
     // ONE FILE PER BUCKET, deliberately: Spark trusts a bucketed
@@ -274,8 +273,7 @@ object ScaleOps {
     if (bucketedFresh(spark, table, srcFingerprint, layout))
       (false, tableProp(spark, table, "graft.buckets").fold(floor)(_.toInt))
     else {
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val stage = new java.io.File(wh, table + "__stage").toString
+      val stage = new java.io.File(StateTable.warehouseRoot(spark), table + "__stage").toString
       df.write.mode("overwrite").parquet(stage)
       val (bytes, rows) = parquetStats(spark, stage)
       val n = deriveBucketCount(bytes, rows, tBytes, tRows, floor)

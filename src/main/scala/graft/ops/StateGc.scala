@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
   * Every persisted state the engine maintains — bucketed CTAS tables
   * (ensureBucketed: dedup digests, LSH bands, ER keys, graph edges) and
   * path layouts / 1-row checkpoints (ensureSortedBy* / ensurePartitioned:
-  * caps, blooms, rank states) — is named `<family>_<sourceTag>` and
-  * freshness-keyed by a source fingerprint (`graft.src` table property
-  * or `_GRAFT_SRC` marker, format `len:mtime[:params|&#124;options]`).
+  * caps, blooms, rank states) — is declared once as a [[StateTable]],
+  * which names it `graft_<family>_<sourceTag>` and freshness-keys it by a
+  * source fingerprint (`graft.src` table property or `_GRAFT_SRC`
+  * marker, format `len:mtime[:params|&#124;options]`).
   * ensure* REBUILDS in place when the fingerprint rolls, so a live
   * source never leaks — but a source that disappears (a retired crawl
   * directory, a deleted fixture) strands its whole generation forever,
@@ -75,6 +76,19 @@ object StateGc {
     }
   }
 
+  /** The key generation `name` (directory `genPath`) was written under:
+    * the `graft.src` property of a catalog table, else the layout's
+    * `_GRAFT_SRC` marker. */
+  private[ops] def recordedKey(spark: SparkSession, name: String,
+                               genPath: String): Option[String] =
+    if (spark.catalog.tableExists(name))
+      spark.sql(s"SHOW TBLPROPERTIES `$name`").collect()
+        .collectFirst { case r if r.getString(0) == "graft.src" => r.getString(1) }
+    else {
+      val (f, p) = fs(spark, genPath)
+      readMarker(f, p)
+    }
+
   /** A recorded generation key matches a current file fingerprint when
     * it IS it, or extends it with the `:params` / `|options` suffix
     * forms ensure* writes. */
@@ -115,11 +129,7 @@ object StateGc {
     val rows = entries.map { st =>
       val name = st.getPath.getName
       val isTable = spark.catalog.tableExists(name)
-      val recorded =
-        if (isTable)
-          spark.sql(s"SHOW TBLPROPERTIES `$name`").collect()
-            .collectFirst { case r if r.getString(0) == "graft.src" => r.getString(1) }
-        else readMarker(f, st.getPath)
+      val recorded = recordedKey(spark, name, st.getPath.toString)
       val tagHit = liveTags.collectFirst {
         case (t, _) if name.endsWith("_" + t) => t
       }
@@ -176,11 +186,10 @@ object StateGc {
     * sessions' demo families older than one hour (a live concurrent
     * audit is seconds old; an hour-old family is a crash leftover). */
   def demoAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val tag = tagOf(sfDir)
+    val wh = StateTable.warehouseRoot(spark)
     val (f, whP) = fs(spark, wh)
-    val sfx = Integer.toHexString(System.identityHashCode(spark))
-    val famPrefix = s"graft_gcdemo${sfx}_"
+    val fam = "gcdemo" + Integer.toHexString(System.identityHashCode(spark))
+    val famPrefix = s"graft_${fam}_"
     // Scorched-earth pre-clean of THIS SESSION's demo family, any tag:
     // the warehouse outlives fixtures, and a live_<otherTag> kept by a
     // previous run at a DIFFERENT sfDir is (correctly) GC'd as dead by
@@ -202,23 +211,23 @@ object StateGc {
           spark.sql(s"DROP TABLE IF EXISTS `${st.getPath.getName}`")
           f.delete(st.getPath, true); ()
         }
-    val docFp = ScaleOps.fileFingerprint(s"$sfDir/documents.parquet")
-    def build(name: String, marker: String): Unit = {
-      val dir = new java.io.File(wh, name).toString
-      spark.range(1).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
-      writeUtf8(f, new org.apache.hadoop.fs.Path(dir, "_GRAFT_SRC"), marker)
+    def build(gen: StateTable, dir: String, marker: String): Unit = {
+      val path = gen.path(spark, dir)
+      spark.range(1).toDF("id").coalesce(1).write.mode("overwrite").parquet(path)
+      writeUtf8(f, new org.apache.hadoop.fs.Path(path, "_GRAFT_SRC"), marker)
     }
-    val liveGen = s"${famPrefix}live_$tag"
-    build(liveGen, docFp + ":demo=1")
-    build(s"${famPrefix}stale_$tag", "0:0")
-    build(s"${famPrefix}dead_tmp_graft_gone_gcdemo", docFp)
+    val live = StateTable(s"${fam}_live", Seq("documents.parquet"), ":demo=1")
+    val liveKey = live.fingerprint(sfDir)
+    build(live, sfDir, liveKey)
+    build(StateTable(s"${fam}_stale", Nil), sfDir, "0:0")
+    val dead = StateTable(s"${fam}_dead", Seq("documents.parquet"))
+    build(dead, "/tmp/graft_gone_gcdemo", dead.fingerprint(sfDir))
     val report = run(spark, wh, Seq(sfDir), prefix = famPrefix,
       dryRun = false).collect()
     // Live probe AFTER the destructive pass: the kept generation must
     // still be a readable layout with its marker intact.
-    val liveDir = new java.io.File(wh, liveGen).toString
-    require(spark.read.parquet(liveDir).count() == 1L &&
-      readMarker(f, new org.apache.hadoop.fs.Path(liveDir)).contains(docFp + ":demo=1"),
+    require(spark.read.parquet(live.path(spark, sfDir)).count() == 1L &&
+      live.recorded(spark, sfDir).contains(liveKey),
       "stateGc demo: live generation damaged by GC")
     val out = report.map { r =>
       val label = r.getString(0).stripPrefix(famPrefix).takeWhile(_ != '_')

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.ops.StateTable
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.similarity.Similarity
@@ -18,7 +19,7 @@ import graft.text.TextFunctions
   * stages (Jaccard, cosine) ARE oracle-checked through the n-gram and
   * brute-force queries.
   */
-object CorpusQueries {
+object CorpusQueries extends StateTable.Registry {
 
   /** Shared recall protocol for the approximate-ANN quality reports:
     * exact top-5 over the vec_id < 200 query sample vs an approximate
@@ -225,7 +226,7 @@ ${p}sg AS MATERIALIZED (SELECT d.doc_id, CAST(coalesce(${p}sg0.sig_hi, 0) AS BIG
     * side, Manku composite-key collision, state buckets over the
     * DERIVED cap dropped (greatest(16, 4 · mean bucket size) — the
     * verdict-path treatment, recomputed here from the bucket rows
-    * exactly as prepareSimhashState persists it), Hamming <= 3 verified
+    * exactly as the SimHash state persists it), Hamming <= 3 verified
     * directly from the signatures (no text re-read — SimHash's
     * structural advantage over the MinHash twin), then a deterministic
     * best witness (hamming asc, state id asc) and a verdict row for
@@ -552,7 +553,7 @@ ${crossVerifyCtes(0.5)}"""
     * acceptance gate can have. Since r17 every probe path (verdict AND
     * budget) uses the DERIVED cap greatest(thisFloor, 4 · mean bucket
     * size), persisted at state-build time as a 1-row checkpoint
-    * ([[lshCapPath]]) so probes stay O(increment). At driver SFs the
+    * ([[lshCap]]) so probes stay O(increment). At driver SFs the
     * mean is ~1 and this floor binds, so the derived cap IS 16 there. */
   private[queries] val lshBandBucketCap = 16
 
@@ -586,7 +587,7 @@ ${crossVerifyCtes(0.5)}"""
 
   /** DERIVED-cap state-side band CTE — the tail-aware cap recomputed
     * from abnd itself, mirroring the persisted statistic
-    * prepareLshState writes (same rows, same integer arithmetic). At
+    * the LSH cap state persists (same rows, same integer arithmetic). At
     * driver SFs the mean is ~1 and the floor binds; at
     * mass-duplication density the cap rides the corpus instead of
     * zeroing the probe. Since r17 this is the ONLY capped band CTE —
@@ -2058,17 +2059,18 @@ SELECT i.vec_id, best.id1 IS NULL AS accepted,
 FROM (SELECT vec_id FROM embeddings WHERE vec_id % 3 = 2) i
 LEFT JOIN best ON best.id2 = i.vec_id""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      prepareCosineState(s, d)
+      val state = cosineState.read(s, d)
+      val cap = cosineCap.readLong(s, d).toInt
       // Watch first, then build: the probe-feed truncation inside
       // incrementalCosineNearDups executes the probe eagerly at plan
       // build (same discipline as dd_incremental_neardup, r19).
-      graft.plans.PlanChecks.watchFinalPlans(s, cosineStateTable(d), "cosine LSH state")
+      graft.plans.PlanChecks.watchFinalPlans(s, cosineState.name(d), "cosine LSH state")
       Dedup.incrementalCosineNearDups(
         emb.filter(col("vec_id") % 3 === 2),
         emb.filter(col("vec_id") % 3 =!= 2),
-        s.table(cosineStateTable(d)),
+        state,
         "vec_id", "embedding", threshold = 0.3,
-        bucketCap = Some(cosineDerivedCap(s, d)),
+        bucketCap = Some(cap),
         probeCheck = cands => graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
           cands.queryExecution.executedPlan, "cosine LSH state"),
         memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")))
@@ -2100,10 +2102,10 @@ SELECT DISTINCT l.vec_id AS state_id, r.vec_id AS inc_id,
 FROM abkc l JOIN bbk r ON l.tb_key = r.tb_key
 JOIN anv a ON a.vec_id = l.vec_id JOIN bnv b ON b.vec_id = r.vec_id
 WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm), 4) >= 0.3""") { (s, d) =>
-      prepareCosineState(s, d)
-      graft.streaming.CosineProbe.verifiedOnce(s, d, cosineStateTable(d),
+      cosineState.ensure(s, d)
+      graft.streaming.CosineProbe.verifiedOnce(s, d, cosineState.name(d),
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
-        threshold = 0.3, bucketCap = Some(cosineDerivedCap(s, d)))
+        threshold = 0.3, bucketCap = Some(cosineCap.readLong(s, d).toInt))
     },
 
     // Embedding cosine near-dup pairs via multi-table LSH (8 planes x 4
@@ -2198,8 +2200,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     // assigns only the increment.
     Q("s_incremental_assign", kmeansAssignOracleSql(8, 2, 64)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareCentroidState(s, d)
-      val cents = s.read.parquet(centroidStatePath(s, d))
+      val cents = centroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
@@ -2229,8 +2230,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     // outer join (count 0, cohesion null).
     Q("s_embedding_drift", embeddingDriftOracleSql(8, 2, 64)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareCentroidState(s, d)
-      val cents = s.read.parquet(centroidStatePath(s, d))
+      val cents = centroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
@@ -2337,16 +2337,15 @@ SELECT i.doc_id, best.test_id IS NOT NULL AS contaminated,
   best.test_id AS best_test_id, best.n_shared
 FROM inc i LEFT JOIN best ON best.inc_id = i.doc_id""") { (s, d) =>
       val docs = Tables.documents(s, d)
-      prepareContamState(s, d)
       val out = Dedup.incrementalContamination(
         docs.filter(col("doc_id") % 6 === 2),
-        s.table(contamStateTable(d)),
+        contamState.read(s, d),
         "doc_id", "text", shingleN = 3, minShared = 3,
-        dfCap = Some(contamDerivedCap(s, d)),
+        dfCap = Some(contamCap.readLong(s, d).toInt),
         dfCol = Some("df"), bloom = Some(contamStateBloom(s, d)))
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         out.queryExecution.executedPlan, "test-suite shingle index")
-      graft.plans.PlanChecks.watchFinalPlans(s, contamStateTable(d),
+      graft.plans.PlanChecks.watchFinalPlans(s, contamState.name(d),
         "test-suite shingle index")
       out
     },
@@ -2371,10 +2370,9 @@ SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_shingles,
   CAST(sum(CASE WHEN c > (SELECT cap FROM capv) THEN c ELSE 0 END) AS BIGINT) AS n_hot_rows,
   CAST((SELECT cap FROM capv) AS BIGINT) AS derived_cap
 FROM df""") { (s, d) =>
-      prepareContamState(s, d)
-      val df = s.table(contamStateTable(d))
+      val df = contamState.read(s, d)
         .groupBy(col("shingle")).agg(count(lit(1)).as("c"))
-      val cap = contamDerivedCap(s, d).toLong
+      val cap = contamCap.readLong(s, d)
       df.agg(sum(col("c")).as("n_rows"), count(lit(1)).as("n_shingles"),
         max(col("c")).as("max_df"),
         sum(when(col("c") > cap, col("c")).otherwise(lit(0L))).as("n_hot_rows"),
@@ -2555,12 +2553,11 @@ WHERE NOT EXISTS (SELECT 1 FROM d1 WHERE d1.content_hash = w.content_hash)""") {
       // is the one worth REQUIREing).
       ss.conf.set("spark.sql.shuffle.partitions", "32")
       val docs = Tables.documents(ss, d)
-      // One-time state write (idempotent, catalog-keyed) — ALSO run by
-      // SparkEntry.prepare so Bench keeps the CTAS out of the timed
-      // body and measures the steady state, sc1-style.
-      prepareDedupState(ss, d)
+      // The digest state's one-time CTAS (idempotent) is ALSO run by
+      // SparkEntry.prepare so Bench keeps it out of the timed body and
+      // measures the steady state, sc1-style.
       val out = Dedup.incrementalDedup(
-        docs.filter(col("doc_id") % 3 === 2), ss.table(dedupStateTable(d)),
+        docs.filter(col("doc_id") % 3 === 2), dedupState.read(ss, d),
         "doc_id", "text")
       val plan = out.queryExecution.executedPlan
       val exchanges = plan.collect {
@@ -2630,13 +2627,14 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       // stays exchange-free), while the small verify joins are free to
       // broadcast — forcing SMJ everywhere cost ~40% of the query.
       val docs = Tables.documents(s, d)
-      prepareLshState(s, d)
+      val state = lshState.read(s, d)
+      val cap = lshCap.readLong(s, d).toInt
       // Watch registered BEFORE the probe-feed truncation inside
       // incrementalNearDups executes the probe as an EAGER job at plan
       // build (the er_incremental_clusters precedent).
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
+      graft.plans.PlanChecks.watchFinalPlans(s, lshState.name(d), "LSH state")
       // VERDICT path → the DERIVED cap (persisted at state-build time,
-      // read back as a 1-row checkpoint — see lshCapPath's policy
+      // read back as a 1-row checkpoint — see lshCap's policy
       // note): at driver SFs the floor binds and this IS
       // lshBandBucketCap; at mass-duplication density the cap rides
       // the corpus instead of zeroing the probe and silently marking
@@ -2654,10 +2652,10 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       Dedup.incrementalNearDups(
         docs.filter(col("doc_id") % 3 === 2),
         docs.filter(col("doc_id") % 3 =!= 2),
-        s.table(lshStateTable(d)),
+        state,
         "doc_id", "text", numHashes = 32, rowsPerBand = 4,
         shingleN = 2, threshold = 0.5,
-        bandBucketCap = Some(lshDerivedCap(s, d)),
+        bandBucketCap = Some(cap),
         probeCheck = cands => graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
           cands.queryExecution.executedPlan, "LSH state"),
         memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")))
@@ -2683,15 +2681,14 @@ SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_buckets,
   CAST(max(c) AS BIGINT) AS max_bucket,
   CAST(${tailCapExpr("bnd", lshBandBucketCap.toString)} AS BIGINT) AS derived_cap
 FROM bk""") { (s, d) =>
-      prepareLshState(s, d)
-      s.table(lshStateTable(d))
+      lshState.read(s, d)
         .groupBy(col("band_key")).agg(count(lit(1)).as("c"))
         .agg(sum(col("c")).as("n_rows"), count(lit(1)).as("n_buckets"),
           expr("sum(c * (c - 1) div 2)").as("n_candidate_pairs"),
           max(col("c")).as("max_bucket"),
           // The PERSISTED tail-aware cap — the number every probe path
           // actually applies (lockstep with the twin's recomputation).
-          lit(lshDerivedCap(s, d).toLong).as("derived_cap"))
+          lit(lshCap.readLong(s, d)).as("derived_cap"))
     },
 
     // Recall accountability for the BINDING probe cap — since r17 the
@@ -2711,11 +2708,10 @@ FROM bk""") { (s, d) =>
     // candidate set is a subset, so its verified set is vf ∩ capped
     // candidates — a semi-join, not a second Jaccard pass.
     Q("dd_cap_recall_audit", capRecallAuditSql) { (s, d) =>
-      prepareLshState(s, d)
+      val stateBands = lshState.read(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       val stDocs = docs.filter(col("doc_id") % 3 =!= 2)
-      val stateBands = s.table(lshStateTable(d))
       // Same CacheOnce keys as the incremental family: the increment
       // sketches once per session no matter which member runs first.
       val incSets = graft.ops.CacheOnce.swap("incr-inc-shingles",
@@ -2723,7 +2719,7 @@ FROM bk""") { (s, d) =>
           explode(Dedup.distinctShingles(col("text"), 2)).as("shingle")))
       val incBands = graft.ops.CacheOnce.swap("incr-inc-bands",
         Dedup.bandKeys(incSets, "doc_id", 32, 4))
-      val cap = lshDerivedCap(s, d)
+      val cap = lshCap.readLong(s, d).toInt
       // ONE probe join for BOTH feeds (r18: the two-feed shape ran the
       // band probe once per feed and, through the un-materialized
       // aggregate fan-out below, re-executed each feed per consumer —
@@ -2777,12 +2773,11 @@ FROM bk""") { (s, d) =>
     // as dd_incremental_neardup.
     Q("dd_incremental_simhash", incrementalSimhashSql) { (s, d) =>
       val docs = Tables.documents(s, d)
-      prepareSimhashState(s, d)
       val out = graft.dedup.Dedup.incrementalSimhashNearDups(
         docs.filter(col("doc_id") % 3 === 2),
-        s.table(simhashStateTable(d)),
+        simhashState.read(s, d),
         "doc_id", "text", maxHamming = 3, blocks = 6,
-        bucketCap = Some(simhashDerivedCap(s, d)))
+        bucketCap = Some(simhashCap.readLong(s, d).toInt))
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         out.queryExecution.executedPlan, "SimHash state")
       // The probe must not smuggle a full-corpus signature pass: the
@@ -2796,7 +2791,7 @@ FROM bk""") { (s, d) =>
           "a documents scan without the increment split predicate — " +
             "the SimHash probe re-read the corpus")
       }
-      graft.plans.PlanChecks.watchFinalPlans(s, simhashStateTable(d), "SimHash state")
+      graft.plans.PlanChecks.watchFinalPlans(s, simhashState.name(d), "SimHash state")
       out
     },
 
@@ -2807,9 +2802,9 @@ FROM bk""") { (s, d) =>
     // batch verify tail exists. Derived bucket cap (persisted at state
     // build — the r17 default for every probe path), cap-aware oracle.
     Q("st_simhash_probe", simhashProbeSql) { (s, d) =>
-      prepareSimhashState(s, d)
-      graft.streaming.SimhashProbe.verifiedOnce(s, d, simhashStateTable(d),
-        bucketCap = Some(simhashDerivedCap(s, d)))
+      simhashState.ensure(s, d)
+      graft.streaming.SimhashProbe.verifiedOnce(s, d, simhashState.name(d),
+        bucketCap = Some(simhashCap.readLong(s, d).toInt))
     },
 
     // The composed daily-crawl pass — the operational shape the three
@@ -2832,8 +2827,10 @@ FROM bk""") { (s, d) =>
     // increment doc: exact_dup / contaminated / near_dup / accepted.
     Q("pipe_crawl_guarded", pipeCrawlGuardedSql) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareDedupState(s, d); prepareContamState(s, d)
-      prepareLshState(s, d); prepareCentroidState(s, d)
+      val dedup = dedupState.read(s, d)
+      val contam = contamState.read(s, d)
+      val lsh = lshState.read(s, d)
+      val cents = centroidState.read(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       // r19 fingerprint sweep (VERDICT item 3): these stage frames
@@ -2842,25 +2839,24 @@ FROM bk""") { (s, d) =>
       // what invalidates them.
       val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
       val exactAcc = graft.ops.CacheOnce.swapTruncated(s"pipe-g-exact-acc:$fp",
-        Dedup.incrementalDedup(inc, s.table(dedupStateTable(d)),
+        Dedup.incrementalDedup(inc, dedup,
           "doc_id", "text").select(col("doc_id")))
       val contamV = graft.ops.CacheOnce.swapTruncated(s"pipe-g-contam:$fp",
         Dedup.incrementalContamination(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"),
-          s.table(contamStateTable(d)),
+          contam,
           "doc_id", "text", shingleN = 3, minShared = 3,
-          dfCap = Some(contamDerivedCap(s, d)),
+          dfCap = Some(contamCap.readLong(s, d).toInt),
           dfCol = Some("df"), bloom = Some(contamStateBloom(s, d))))
       val clean = contamV.filter(!col("contaminated")).select(col("doc_id"))
       val ndVerdicts = graft.ops.CacheOnce.swapTruncated(s"pipe-g-nd-verdicts:$fp",
         Dedup.incrementalNearDups(
           inc.join(clean, Seq("doc_id"), "left_semi"),
-          docs.filter(col("doc_id") % 3 =!= 2), s.table(lshStateTable(d)),
+          docs.filter(col("doc_id") % 3 =!= 2), lsh,
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
-          threshold = 0.5, bandBucketCap = Some(lshDerivedCap(s, d)),
+          threshold = 0.5, bandBucketCap = Some(lshCap.readLong(s, d).toInt),
           memoTag = Some(s"pipe-g:$fp")))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
-      val cents = s.read.parquet(centroidStatePath(s, d))
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
       val vecs = Tables.embeddings(s, d)
@@ -2893,7 +2889,9 @@ FROM bk""") { (s, d) =>
 
     Q("pipe_incremental_crawl", pipeIncrementalCrawlSql) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareDedupState(s, d); prepareLshState(s, d); prepareCentroidState(s, d)
+      val dedup = dedupState.read(s, d)
+      val lsh = lshState.read(s, d)
+      val cents = centroidState.read(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       // Both stage outputs feed TWO consumers each (the next stage and
@@ -2904,17 +2902,16 @@ FROM bk""") { (s, d) =>
       // (state tables are referenced by NAME — see pipe_crawl_guarded).
       val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
       val exactAcc = graft.ops.CacheOnce.swapTruncated(s"pipe-incr-exact-acc:$fp",
-        Dedup.incrementalDedup(inc, s.table(dedupStateTable(d)),
+        Dedup.incrementalDedup(inc, dedup,
           "doc_id", "text").select(col("doc_id")))
       val ndVerdicts = graft.ops.CacheOnce.swapTruncated(s"pipe-incr-nd-verdicts:$fp",
         Dedup.incrementalNearDups(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"),
-          docs.filter(col("doc_id") % 3 =!= 2), s.table(lshStateTable(d)),
+          docs.filter(col("doc_id") % 3 =!= 2), lsh,
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
-          threshold = 0.5, bandBucketCap = Some(lshDerivedCap(s, d)),
+          threshold = 0.5, bandBucketCap = Some(lshCap.readLong(s, d).toInt),
           memoTag = Some(s"pipe-incr:$fp")))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
-      val cents = s.read.parquet(centroidStatePath(s, d))
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
       val vecs = Tables.embeddings(s, d)
@@ -2950,9 +2947,9 @@ FROM bk""") { (s, d) =>
     // stream-static join; the settled distinct equals the batch
     // candidate set at any arrival order.
     Q("st_lsh_probe", lshProbeSql) { (s, d) =>
-      prepareLshState(s, d)
-      graft.streaming.LshProbe.candidatesOnce(s, d, lshStateTable(d),
-        bandBucketCap = Some(lshDerivedCap(s, d)))
+      lshState.ensure(s, d)
+      graft.streaming.LshProbe.candidatesOnce(s, d, lshState.name(d),
+        bandBucketCap = Some(lshCap.readLong(s, d).toInt))
     },
 
     // Bloom-prefiltered decontamination: test-split shingles collapse
@@ -3060,11 +3057,11 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // incremental path must reproduce it row-for-row, and a capped
     // probe would drop pairs the full re-cluster keeps.
     Q("dd_incremental_clusters", incrementalClustersOracleSql) { (s, d) =>
-      prepareClusterState(s, d); prepareLshState(s, d)
-      val state = s.read.parquet(clusterStatePath(s, d))
+      val state = clusterState.read(s, d)
+      lshState.ensure(s, d)
       // Watch registered BEFORE the shared-feed truncation executes the
       // probe as an eager job at plan build.
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
+      graft.plans.PlanChecks.watchFinalPlans(s, lshState.name(d), "LSH state")
       // The three scale claims, asserted from the UN-truncated pair-feed
       // plan per invocation (PlanChecks descends into the CacheOnce'd
       // stages): (1) the bucketed LSH state enters its probe join
@@ -3144,17 +3141,17 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // move. Oracle = the full unrolled recompute of both phases with
     // bit-identical teleport constants.
     Q("pg_incremental_pagerank", incrementalPageRankOracleSql) { (s, d) =>
-      preparePageRankState(s, d); prepareLshState(s, d)
+      val stateEdges = pgEdgeState.read(s, d)
+      val stateRanks = pgRankState.read(s, d)
+      lshState.ensure(s, d)
       // Watches registered BEFORE the refresh is built: the pair-feed
       // and per-superstep truncations execute the LSH probe and
       // supersteps 1..iters-1 as EAGER jobs at plan build, and their
       // bucketed state joins must land inside the AQE-final watch
       // window (only superstep `iters` remains in the terminal plan
       // the REQUIRE below inspects).
-      graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeStateTable(d), "PageRank edge state")
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
-      val stateEdges = s.table(pgEdgeStateTable(d))
-      val stateRanks = s.read.parquet(rankStatePath(s, d))
+      graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeState.name(d), "PageRank edge state")
+      graft.plans.PlanChecks.watchFinalPlans(s, lshState.name(d), "LSH state")
       // r19: the SHARED uncapped pair feed (one probe+verify execution
       // per session for the whole cluster/graph family; the feed's own
       // layout REQUIREs run in dd_incremental_clusters' check).
@@ -3180,17 +3177,17 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // oracle is the full merged-graph recount (pg_triangles' own SQL):
     // state + delta == full is the IVM invariant, checked by hash.
     Q("pg_incremental_triangles", trianglesOracleSql) { (s, d) =>
-      prepareTriangleState(s, d); prepareLshState(s, d)
+      val stateAdj = pgEdgeState.read(s, d)
+      val statePairs = pgPairState.read(s, d)
+      val stateCounts = triangleState.read(s, d)
+      lshState.ensure(s, d)
       // Registered BEFORE the refresh builds: the delta truncation
       // executes the LSH pair feed as an EAGER job at plan build, and
       // its bucketed band-state probe must land inside the watch window
       // (the terminal plan only retains the dEE edge-state join).
-      graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeStateTable(d), "triangle edge state")
-      graft.plans.PlanChecks.watchFinalPlans(s, pgPairStateTable(d), "triangle pair state")
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
-      val stateAdj = s.table(pgEdgeStateTable(d))
-      val statePairs = s.table(pgPairStateTable(d))
-      val stateCounts = s.read.parquet(triangleStatePath(s, d))
+      graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeState.name(d), "triangle edge state")
+      graft.plans.PlanChecks.watchFinalPlans(s, pgPairState.name(d), "triangle pair state")
+      graft.plans.PlanChecks.watchFinalPlans(s, lshState.name(d), "LSH state")
       // r19: same SHARED uncapped pair feed as dd_incremental_clusters
       // and pg_incremental_pagerank — one probe+verify per session.
       val incPairs = sharedUncappedIncPairs(s, d)
@@ -3208,10 +3205,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // state-side Exchange may be planned (r16 advisory + the r17
       // composite-key finding).
       graft.plans.PlanChecks.requireSortFreeBucketedScan(
-        out.queryExecution.executedPlan, pgEdgeStateTable(d),
+        out.queryExecution.executedPlan, pgEdgeState.name(d),
         "triangle edge state")
       graft.plans.PlanChecks.requireSortFreeBucketedScan(
-        out.queryExecution.executedPlan, pgPairStateTable(d),
+        out.queryExecution.executedPlan, pgPairState.name(d),
         "triangle pair state")
       out
     },
@@ -3227,8 +3224,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     Q("ivm_daily_tally",
       "SELECT CAST(ts + INTERVAL 8 HOUR AS DATE) AS obs_date, event_type, " +
         "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2") { (s, d) =>
-      prepareTallyState(s, d)
-      val state = s.read.parquet(tallyStatePath(s, d))
+      val state = tallyState.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3260,8 +3256,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         // oracle run instead of comparing NULL==NULL.
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
-      prepareMetricsState(s, d)
-      val state = s.read.parquet(metricsStatePath(s, d))
+      val state = metricsState.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3286,8 +3281,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       "SELECT CAST(ts + INTERVAL 8 HOUR AS DATE) AS obs_date, event_type, " +
         "CAST(count(DISTINCT user_id) AS BIGINT) AS n_users " +
         "FROM events GROUP BY 1, 2") { (s, d) =>
-      prepareUsersState(s, d)
-      val state = s.read.parquet(usersStatePath(s, d))
+      val state = usersState.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"), col("user_id"))
@@ -3311,8 +3305,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "SELECT obs_month, event_type, CAST(count(*) AS BIGINT) AS n, " +
         "CAST(sum(cents) AS BIGINT) / 100.0 AS total_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
-      prepareMetricsState(s, d)
-      val state = s.read.parquet(metricsStatePath(s, d))
+      val state = metricsState.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3342,14 +3335,13 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // fixed point with the LC small-range switch; oracle = the full
     // profile recompute (monoid merge + register max-merge == full).
     Q("dq_incremental_profile", dqIncProfileSql) { (s, d) =>
-      prepareDqProfState(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
-      val counts = s.read.parquet(dqProfCountsPath(s, d))
+      val counts = dqProfCountsState.read(s, d)
         .unionByName(dqProfCounts(inc))
         .groupBy(col("col_name"))
         .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_nulls")).as("n_nulls"))
-      val regs = s.read.parquet(dqProfRegsPath(s, d))
+      val regs = dqProfRegsState.read(s, d)
         .unionByName(dqProfRegisters(inc))
         .groupBy(col("col_name"), col("bucket"))
         .agg(max(col("r")).as("r"))
@@ -3397,8 +3389,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(sum(cents) AS BIGINT) / 100.0 AS total_value, " +
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
-      prepareMetricsState(s, d)
-      val state = s.read.parquet(metricsStatePath(s, d))
+      val state = metricsState.read(s, d)
       val deltas = Tables.events(s, d)
         .filter(col("event_id") % 3 =!= 2 && col("event_id") % 7 === 3 &&
           col("value").isNotNull)
@@ -3439,8 +3430,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // small/large-range corrections — v_zero ships so a consumer can
     // apply linear counting downstream); no float ever compares.
     Q("ivm_daily_users_hll", hllUsersOracleSql) { (s, d) =>
-      prepareHllState(s, d)
-      val state = s.read.parquet(hllStatePath(s, d))
+      val state = hllState.read(s, d)
       val incr = hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
         .groupBy(col("obs_date"), col("event_type"), col("bucket"))
@@ -3494,8 +3484,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // bottom-k holds fixed SIZE, the shape eval sets and audits want.
     Q("ivm_bottomk_sample", bottomkOracleSql) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareBottomkState(s, d)
-      val state = s.read.parquet(bottomkStatePath(s, d))
+      val state = bottomkState.read(s, d)
       val incr = bottomkRanked(
         Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val g = Window.partitionBy(col("obs_date"), col("event_type"))
@@ -3537,8 +3526,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "min(CASE WHEN cum >= (9 * n + 9) // 10 THEN bucket END) AS p90_bucket " +
         "FROM x GROUP BY 1, 2") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareQuantState(s, d)
-      val state = s.read.parquet(quantStatePath(s, d))
+      val state = quantState.read(s, d)
       val incr = quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
         .groupBy(col("obs_date"), col("event_type"), col("bucket"))
@@ -3567,8 +3555,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty, " +
         "CAST(count(*) AS BIGINT) AS n_items " +
         "FROM orders JOIN lineitem ON l_orderkey = o_orderkey GROUP BY 1") { (s, d) =>
-      prepareJoinAggState(s, d)
-      val state = s.read.parquet(joinAggStatePath(s, d))
+      val state = joinAggState.read(s, d)
       val o = Tables.orders(s, d); val l = Tables.lineitem(s, d)
       val deltas = Seq(
         joinAggPartial(ordersNew(o), lineitemOld(l)),
@@ -3717,49 +3704,44 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
         "doc_id", "text", n = 5, w = 8, useMd5 = true)
     })
 
-  /** dd_incremental's persisted digest-state table, keyed by source dir
-    * (same convention as the sc1 bucket tables). */
-  private[queries] def dedupStateTable(sfDir: String): String =
-    s"graft_dd_state_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
+  private val docsSrc = Seq("documents.parquet")
+  private val embSrc = Seq("embeddings.parquet")
+  private val eventsSrc = Seq("events.parquet")
 
-  /** s_incremental_assign's persisted centroid-state path (tiny: k
-    * rows), fingerprint-marked via ScaleOps so a regenerated embeddings
-    * source RETRAINS instead of serving stale centroids. */
-  private[queries] def centroidStatePath(s: org.apache.spark.sql.SparkSession,
-                                         d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_km_state_$tag").toString
+  /** dd_incremental's persisted digest state: one-time bucketed CTAS of
+    * the accepted docs' content hashes ("write once, anti-join
+    * forever"). */
+  private val dedupState = bucketedState("dd_state", docsSrc, Seq("content_hash")) { (s, d) =>
+    Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
+      .select(md5(col("text")).as("content_hash")).distinct()
   }
 
-  /** dd_incremental_clusters' persisted cluster-state path (one row per
-    * clustered state doc), fingerprint-marked so a regenerated corpus
-    * re-clusters instead of serving stale labels. */
-  private[graft] def clusterStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_cc_state_$tag").toString
+  /** s_incremental_assign's persisted centroid state (tiny: k rows):
+    * one-time k-means training on the day-1 vectors ("train once,
+    * assign forever"), so a regenerated embeddings source RETRAINS
+    * instead of serving stale centroids. The frame is only built when
+    * stale: kmeansCentroids executes its driver-looped training at call
+    * time. */
+  private val centroidState = sortedState("km_state", embSrc, "vec_id") { (s, d) =>
+    graft.similarity.Similarity.kmeansCentroids(
+      Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
+      "vec_id", "embedding", k = 8, iters = 2, dim = 64,
+      roundMeans = Some(6))
   }
 
-  /** One-time clustering of the accepted set's near-dup pair graph;
-    * persists (node, cluster_id) sorted by node (cluster once, merge
-    * increments forever). Idempotent per (path, source fingerprint). */
-  def prepareClusterState(s: org.apache.spark.sql.SparkSession,
-                          d: String): Unit =
-    // BY-NAME frame: connectedComponents runs its whole propagation loop
-    // at call time, so the eager variant re-clustered the state on every
-    // freshness check (~2s per registered-query call at sf0.1, all
-    // thrown away when the marker was fresh).
-    graft.ops.ScaleOps.ensureSortedByLazy(s,
-      clusterStatePath(s, d), "node", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(
-        s"$d/documents.parquet"))(
-      graft.dedup.Dedup.connectedComponents(
-        graft.dedup.Dedup.minhashNearDupsMd5(
-          Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
-          "doc_id", "text",
-          numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)))
+  /** dd_incremental_clusters' persisted cluster state: one-time
+    * clustering of the accepted set's near-dup pair graph, (node,
+    * cluster_id) sorted by node ("cluster once, merge increments
+    * forever"). The frame is only built when stale: connectedComponents
+    * runs its whole propagation loop at call time (~2s per call at
+    * sf0.1 when it was built eagerly on every freshness check). */
+  private val clusterState = sortedState("cc_state", docsSrc, "node") { (s, d) =>
+    graft.dedup.Dedup.connectedComponents(
+      graft.dedup.Dedup.minhashNearDupsMd5(
+        Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
+        "doc_id", "text",
+        numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
+  }
 
   /** The streamed incremental-cluster pipeline behind
     * st_incremental_clusters(_capped), watermark-bounded (verdict-17
@@ -3790,21 +3772,18 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
   private def watermarkedStreamClusters(s: org.apache.spark.sql.SparkSession,
                                         d: String,
                                         capped: Boolean): org.apache.spark.sql.DataFrame = {
-    prepareClusterState(s, d); prepareLshState(s, d)
+    clusterState.ensure(s, d); lshState.ensure(s, d)
     val docs = Tables.documents(s, d)
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val family = if (capped) "graft_st_cc_capped_" else "graft_st_cc_cands_"
-    val base = new java.io.File(wh, family + tag).toString
+    val lineage = StateTable(if (capped) "st_cc_capped" else "st_cc_cands", docsSrc)
+    val base = lineage.path(s, d)
     // The cap is part of the lineage: a state rebuild that moves the
     // derived cap must restart the sink (old collisions were gated by
     // the old cap).
-    val cap = if (capped) Some(lshDerivedCap(s, d)) else None
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet") +
-      cap.fold("")(c => s"|cap=$c")
+    val cap = if (capped) Some(lshCap.readLong(s, d).toInt) else None
+    val fp = lineage.fingerprint(d) + cap.fold("")(c => s"|cap=$c")
     graft.streaming.LshProbe.resetLineageIfStale(s, base, fp)
     val drain = graft.streaming.LshProbe.candidatesWatermarked(
-      s, d, lshStateTable(d), base, bandBucketCap = cap)
+      s, d, lshState.name(d), base, bandBucketCap = cap)
     val settledDir = s"$base/settled"
     val tmpDir = s"$base/settled_tmp"
     // Crash recovery BEFORE the existence test: a crash inside the
@@ -3820,7 +3799,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     if (drain.newFiles.nonEmpty || !settledExists) {
       val priorState =
         if (settledExists) s.read.parquet(settledDir)
-        else s.read.parquet(clusterStatePath(s, d))
+        else clusterState.read(s, d)
       val pairs = Dedup.verifyIncrementPairs(
         drain.newPairs.select(col("state_id").as("id1"), col("inc_id").as("id2")),
         docs.filter(col("doc_id") % 3 === 2),
@@ -3840,40 +3819,17 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     s.read.parquet(settledDir)
   }
 
-  /** One-time k-means training on the day-1 vectors; persists the k
-    * centroids (train once, assign forever). Idempotent per (path,
-    * source fingerprint). */
-  def prepareCentroidState(s: org.apache.spark.sql.SparkSession,
-                           d: String): Unit =
-    // BY-NAME frame: kmeansCentroids executes its training loop at call
-    // time (driver-looped), same freshness-check trap as
-    // [[prepareClusterState]].
-    graft.ops.ScaleOps.ensureSortedByLazy(s,
-      centroidStatePath(s, d), "vec_id", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(
-        s"$d/embeddings.parquet"))(
-      graft.similarity.Similarity.kmeansCentroids(
-        Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
-        "vec_id", "embedding", k = 8, iters = 2, dim = 64,
-        roundMeans = Some(6)))
-
   /** ivm_daily_tally's persisted partial-aggregate state (day-1 daily
-    * tallies), fingerprint-keyed like the other state tables. */
-  private[queries] def tallyStatePath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_tally_$tag").toString
+    * tallies). */
+  private val tallyState = sortedState("ivm_tally", eventsSrc, "obs_date") { (s, d) =>
+    Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
+      .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
+        .as("obs_date"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
   }
 
   def prepareTallyState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
-        .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
-          .as("obs_date"), col("event_type"))
-        .agg(count(lit(1)).as("n")),
-      tallyStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+    tallyState.ensure(s, d)
 
   /** ivm_daily_metrics' persisted partial-aggregate state: the
     * commutative-monoid triple (count(*), count(value), sum(cents)) per
@@ -3885,22 +3841,13 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * (observed: 42.90625 → 42.9063 Spark HALF_UP / 42.9062 DuckDB
     * half-even). Integer partials + floor-division presentation are
     * tie-free and bit-identical in both engines. */
-  private[queries] def metricsStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_metrics_$tag").toString
+  private val metricsState = sortedState("ivm_metrics", eventsSrc, "obs_date") { (s, d) =>
+    Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
+      .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
+        .as("obs_date"), col("event_type"))
+      .agg(count(lit(1)).as("n"), count(col("value")).as("nv"),
+        sum(round(col("value") * 100).cast("long")).as("cents"))
   }
-
-  def prepareMetricsState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
-        .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
-          .as("obs_date"), col("event_type"))
-        .agg(count(lit(1)).as("n"), count(col("value")).as("nv"),
-          sum(round(col("value") * 100).cast("long")).as("cents")),
-      metricsStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
 
   /** ivm_daily_users' persisted SUPPORT relation: count(DISTINCT x) is
     * not a commutative monoid over counts (2 distinct ∪ 3 distinct is
@@ -3908,21 +3855,12 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * distinct (day, type, user) triples themselves — the support — and
     * derives the count at presentation. State size rides the support
     * cardinality (bounded by days × types × users), never raw events. */
-  private[queries] def usersStatePath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_users_$tag").toString
+  private val usersState = sortedState("ivm_users", eventsSrc, "obs_date") { (s, d) =>
+    Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
+      .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
+        .as("obs_date"), col("event_type"), col("user_id"))
+      .distinct()
   }
-
-  def prepareUsersState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
-        .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
-          .as("obs_date"), col("event_type"), col("user_id"))
-        .distinct(),
-      usersStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
 
   // ---- ivm_daily_users_hll: deterministic HLL-register sketch ----
   // 64 buckets (p=6) over the md5-derived 64-bit user hash, carried as
@@ -4061,36 +3999,21 @@ FROM rw"""
       .drop("_rn")
   }
 
-  private[queries] def bottomkStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_bottomk_$tag").toString
-  }
-
   /** ivm_bottomk_sample's persisted state: day-1 events reduced to the
     * 32 rank-smallest per (day, type) — k rows per group forever. */
-  def prepareBottomkState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      bottomkRanked(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)),
-      bottomkStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
-
-  private[queries] def hllStatePath(s: org.apache.spark.sql.SparkSession,
-                                    d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_hll_$tag").toString
+  private val bottomkState = sortedState("ivm_bottomk", eventsSrc, "obs_date") { (s, d) =>
+    bottomkRanked(Tables.events(s, d).filter(col("event_id") % 3 =!= 2))
   }
 
   /** ivm_daily_users_hll's persisted REGISTER state: day-1 events
     * reduced to (day, type, bucket, max rank) — O(groups · 64) rows no
     * matter how many events or users day 1 held. */
+  private val hllState = sortedState("ivm_hll", eventsSrc, "obs_date") { (s, d) =>
+    hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 =!= 2))
+  }
+
   def prepareHllState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)),
-      hllStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+    hllState.ensure(s, d)
 
   /** ivm_daily_quantiles' persisted SKETCH state: per-(day, type)
     * dollar-bucket histograms of `value` — the mergeable-summary
@@ -4100,11 +4023,8 @@ FROM rw"""
     * sketch-of-all exactly). Bucket = floor(value), domain-bounded
     * (~500 buckets), so state rides days × types × buckets — never raw
     * events. */
-  private[queries] def quantStatePath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_quant_$tag").toString
+  private val quantState = sortedState("ivm_quant", eventsSrc, "obs_date") { (s, d) =>
+    quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 =!= 2))
   }
 
   private def quantBuckets(df: org.apache.spark.sql.DataFrame) =
@@ -4121,23 +4041,18 @@ FROM rw"""
       floor(col("value")).cast("long").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
 
-  def prepareQuantState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)),
-      quantStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
-
   /** ivm_join_agg's persisted day-1 JOIN-aggregate state: the
     * orders ⋈ lineitem daily quantity rollup over the day-1 slices of
     * BOTH tables. The increment merge uses the standard delta-join
     * rule — Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB — so the old⋈old join (the
     * O(history²-ish) term) is never recomputed; each delta term joins
-    * an increment against a base or another increment. */
-  private[queries] def joinAggStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_joinagg_$tag").toString
+    * an increment against a base or another increment. Keyed on BOTH
+    * sources: the persisted old⋈old aggregate derives from orders AND
+    * lineitem — a lineitem-only key would silently serve stale join
+    * state after orders alone regenerates. */
+  private val joinAggState = sortedState("ivm_joinagg",
+      Seq("orders.parquet", "lineitem.parquet"), "order_date") { (s, d) =>
+    joinAggPartial(ordersOld(Tables.orders(s, d)), lineitemOld(Tables.lineitem(s, d)))
   }
 
   /** Old/new split predicates for the two join sides — INDEPENDENT keys
@@ -4161,22 +4076,22 @@ FROM rw"""
       .groupBy(col("order_date"))
       .agg(sum(col("qty")).as("total_qty"), count(lit(1)).as("n_items"))
 
-  def prepareJoinAggState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      joinAggPartial(ordersOld(Tables.orders(s, d)),
-        lineitemOld(Tables.lineitem(s, d))),
-      joinAggStatePath(s, d), "order_date", numFiles = 1,
-      // BOTH source fingerprints: the persisted old⋈old aggregate
-      // derives from orders AND lineitem — a lineitem-only key would
-      // silently serve stale join state after orders alone regenerates
-      // (the exact staleness mode ensureBucketed's docs warn about).
-      srcFingerprint =
-        graft.ops.ScaleOps.fileFingerprint(s"$d/orders.parquet") + "|" +
-          graft.ops.ScaleOps.fileFingerprint(s"$d/lineitem.parquet"))
+  /** dd_incremental_neardup's persisted LSH band-bucket state: one-time
+    * bucketed CTAS of the accepted set's (doc_id, band_key), bucketed on
+    * band_key — the probe-join key — so every later increment probes it
+    * exchange-free. */
+  private val lshState = bucketedState("dd_lshstate", docsSrc, Seq("band_key")) { (s, d) =>
+    graft.dedup.Dedup.bandKeys(
+      Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2).select(col("doc_id"),
+        explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle")),
+      "doc_id", 32, 4)
+  }
 
-  /** dd_incremental_neardup's persisted LSH band-bucket state table. */
-  private[graft] def lshStateTable(sfDir: String): String =
-    s"graft_dd_lshstate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
+  /** The LSH state's table name and build, for callers outside the
+    * query registry. */
+  private[graft] def lshStateTable(d: String): String = lshState.name(d)
+  def prepareLshState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    lshState.ensure(s, d)
 
   /** The UNCAPPED increment-bounded verified pair feed, truncated ONCE
     * per source generation and shared by its three consumers
@@ -4200,7 +4115,7 @@ FROM rw"""
     val feed = Dedup.incrementalNearDupPairs(
       docs.filter(col("doc_id") % 3 === 2),
       docs.filter(col("doc_id") % 3 =!= 2),
-      s.table(lshStateTable(d)),
+      lshState.read(s, d),
       "doc_id", "text", numHashes = 32, rowsPerBand = 4,
       shingleN = 2, threshold = 0.5, bandBucketCap = None)
     check(feed)
@@ -4229,23 +4144,10 @@ FROM rw"""
     * size at build time), so a drain's fan-out is capped at a number
     * fixed before the drain starts — it grows only when the state is
     * rebuilt denser, which is the accountable trade the audit row
-    * records. */
-  private[queries] def lshCapPath(s: org.apache.spark.sql.SparkSession,
-                                  d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_lshcap_$tag").toString
-  }
-
-  /** Read the persisted derived cap (1 row — driver-small by
-    * construction). */
-  private[queries] def lshDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                     d: String): Int = {
-    prepareLshState(s, d)
-    // Memoized per state generation (ScaleOps.readStatLong): the head()
-    // was a full driver job per cap-consuming query invocation.
-    graft.ops.ScaleOps.readStatLong(s, lshCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")).toInt
+    * records. "|p99": the tail-aware cap formula change must re-derive
+    * caps persisted by the mean-only r17 generation. */
+  private val lshCap = sortedState("dd_lshcap", docsSrc, "derived_cap", "|p99") { (s, d) =>
+    tailAwareCapDf(bucketSizes(lshState.read(s, d), "band_key"), lshBandBucketCap.toLong)
   }
 
   /** TAIL-AWARE derived cap over a state's bucket-size distribution —
@@ -4264,12 +4166,8 @@ FROM rw"""
     val hist = sizes.groupBy(col("c")).agg(count(lit(1)).as("f"))
     val tot = hist.agg(coalesce(sum(col("f")), lit(0L)).as("nb"),
       coalesce(sum(col("c") * col("f")), lit(0L)).as("nr"))
-    // Constant partition key: the cumulative frame is the SIZE HISTOGRAM
-    // (distinct bucket sizes), bounded at any scale — see the scaladoc;
-    // the explicit key documents the bound and silences the WindowExec
-    // no-partition warning.
     val cum = hist.withColumn("cum", sum(col("f")).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(lit(0)).orderBy(col("c"))))
+      org.apache.spark.sql.expressions.Window.orderBy(col("c"))))
     val p99 = cum.crossJoin(tot)
       .filter(col("cum") >= ceil(lit(0.99) * col("nb")).cast("long"))
       .agg(min(col("c")).as("p99"))
@@ -4278,70 +4176,25 @@ FROM rw"""
         coalesce(col("p99"), lit(floor))).as("derived_cap"))
   }
 
-  /** Bucket sizes of a persisted state table, keyed on `key` — the
+  /** Bucket sizes of a persisted bucketed state, keyed on `key` — the
     * input [[tailAwareCapDf]] consumes; the groupBy rides the table's
     * own bucketing (no exchange). */
-  private def stateBucketSizes(s: org.apache.spark.sql.SparkSession,
-                               table: String, key: String) =
-    s.table(table).groupBy(col(key)).agg(count(lit(1)).as("c"))
-
-  /** One-time bucketed CTAS of the accepted set's LSH band buckets
-    * (doc_id, band_key), bucketed on band_key — the probe-join key — so
-    * every later increment probes it exchange-free. Same idempotent
-    * catalog-keyed convention as [[prepareDedupState]]. Also persists
-    * the derived verdict-path cap ([[lshCapPath]]) from the freshly
-    * built table, so cap and state can never drift. */
-  def prepareLshState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val state = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-    val sets = state.select(col("doc_id"),
-      explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle"))
-    // "|p99": the tail-aware cap formula change must re-derive caps
-    // persisted by the mean-only r17 generation.
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      graft.dedup.Dedup.bandKeys(sets, "doc_id", 32, 4),
-      lshStateTable(d), Seq("band_key"), srcFingerprint = fp)
-    graft.ops.ScaleOps.ensureSortedByLazy(s, lshCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
-      tailAwareCapDf(stateBucketSizes(s, lshStateTable(d), "band_key"),
-        lshBandBucketCap.toLong))
-  }
-
-  private[graft] def simhashStateTable(sfDir: String): String =
-    s"graft_dd_simhashstate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def simhashCapPath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_simhashcap_$tag").toString
-  }
-
-  /** Read the persisted derived Manku-bucket cap (1 row — driver-small
-    * by construction). */
-  private[queries] def simhashDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                         d: String): Int = {
-    prepareSimhashState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, simhashCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")).toInt
-  }
+  private def bucketSizes(state: org.apache.spark.sql.DataFrame, key: String) =
+    state.groupBy(col(key)).agg(count(lit(1)).as("c"))
 
   /** One-time bucketed CTAS of the accepted set's SimHash Manku keys
     * (doc_id, sig_hi, sig_lo, mkey), bucketed on mkey — the probe-join
-    * key — plus the derived verdict-path bucket cap persisted from the
-    * freshly built table ([[lshCapPath]]'s policy applied to the
-    * SimHash family: the cap is a layout statistic, computed once at
+    * key. */
+  private val simhashState = bucketedState("dd_simhashstate", docsSrc, Seq("mkey")) { (s, d) =>
+    graft.dedup.Dedup.simhashMankuKeysMd5(graft.dedup.Dedup.simhashMd5(
+      Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2), "doc_id", "text"), "doc_id")
+  }
+
+  /** The derived verdict-path Manku-bucket cap ([[lshCap]]'s policy
+    * applied to the SimHash family: a layout statistic computed once at
     * state-build time, so probes stay O(increment)). */
-  def prepareSimhashState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val state = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      graft.dedup.Dedup.simhashMankuKeysMd5(
-        graft.dedup.Dedup.simhashMd5(state, "doc_id", "text"), "doc_id"),
-      simhashStateTable(d), Seq("mkey"), srcFingerprint = fp)
-    graft.ops.ScaleOps.ensureSortedByLazy(s, simhashCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
-      tailAwareCapDf(stateBucketSizes(s, simhashStateTable(d), "mkey"), 16L))
+  private val simhashCap = sortedState("dd_simhashcap", docsSrc, "derived_cap", "|p99") { (s, d) =>
+    tailAwareCapDf(bucketSizes(simhashState.read(s, d), "mkey"), 16L)
   }
 
   // ---- dq_incremental_profile: maintained per-column profile ----
@@ -4378,30 +4231,14 @@ FROM rw"""
       .groupBy(col("col_name"), col("bucket"))
       .agg(max(expr(rhoCaseSql("_w58"))).as("r"))
 
-  private[queries] def dqProfCountsPath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dq_profcnt_$tag").toString
-  }
-
-  private[queries] def dqProfRegsPath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dq_profregs_$tag").toString
-  }
-
   /** dq_incremental_profile's persisted state: per-column count
     * partials + per-(column, bucket) HLL registers over day-1 docs —
     * O(cols) + O(cols x 64) rows no matter the corpus size. */
-  def prepareDqProfState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val day1 = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureSortedBy(dqProfCounts(day1),
-      dqProfCountsPath(s, d), "col_name", numFiles = 1, srcFingerprint = fp)
-    graft.ops.ScaleOps.ensureSortedBy(dqProfRegisters(day1),
-      dqProfRegsPath(s, d), "col_name", numFiles = 1, srcFingerprint = fp)
+  private val dqProfCountsState = sortedState("dq_profcnt", docsSrc, "col_name") { (s, d) =>
+    dqProfCounts(Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2))
+  }
+  private val dqProfRegsState = sortedState("dq_profregs", docsSrc, "col_name") { (s, d) =>
+    dqProfRegisters(Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2))
   }
 
   /** dq_incremental_profile oracle: the SAME profile recomputed over
@@ -4432,32 +4269,44 @@ SELECT c.col_name, c.n_rows, c.n_nulls,
 FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
   }
 
-  private[graft] def contamStateTable(sfDir: String): String =
-    s"graft_dd_contamstate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def contamCapPath(s: org.apache.spark.sql.SparkSession,
-                                     d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_contamcap_$tag").toString
+  /** One-time bucketed CTAS of the TEST SUITE's distinct 3-shingles
+    * (test_id, shingle, df), bucketed on shingle — the probe-join key of
+    * incremental decontamination. Per-shingle doc frequency is computed
+    * ONCE here (the window rides the CTAS's own bucketing shuffle) and
+    * stored as an index column, so every later probe applies the cap as
+    * a scan predicate instead of re-windowing |state| per refresh. "|v2":
+    * the df-column schema change must rebuild a v1 index (and the two
+    * layout statistics derived from it below). */
+  private val contamState = bucketedState("dd_contamstate", docsSrc, Seq("shingle"), "|v2") { (s, d) =>
+    Tables.documents(s, d).filter(col("doc_id") % 2 === 1)
+      .select(col("doc_id").as("test_id"),
+        explode(graft.dedup.Dedup.distinctShingles(col("text"), 3)).as("shingle"))
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
   }
 
-  private[queries] def contamDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                        d: String): Int = {
-    prepareContamState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, contamCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")).toInt
+  /** The df cap: greatest(8, 4 · mean test-side df), a 1-row checkpoint
+    * like every other derived cap. */
+  private val contamCap = sortedState("dd_contamcap", docsSrc, "derived_cap", "|v2") { (s, d) =>
+    contamState.read(s, d)
+      .agg(greatest(lit(8L),
+        expr("4 * count(1) div count(DISTINCT shingle)")).as("derived_cap"))
   }
 
-  private[queries] def contamBloomPath(s: org.apache.spark.sql.SparkSession,
-                                       d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_contambloom_$tag").toString
+  /** The capped index's shingle Bloom filter (1% fpp, hex-serialized
+    * 1-row checkpoint) that prefilters each increment's shingles in
+    * their scan stage. */
+  private val contamBloom = sortedState("dd_contambloom", docsSrc, "bloom_hex", "|v2") { (s, d) =>
+    val cap = contamCap.readLong(s, d)
+    val keys = contamState.read(s, d)
+      .filter(col("df") <= cap).select(col("shingle")).distinct()
+    val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)
+    import s.implicits._
+    Seq(graft.functions.BloomFunctions.toHex(bf)).toDF("bloom_hex")
   }
 
   /** The persisted suite-shingle Bloom filter (built at state-build time
-    * over the CAPPED index — see [[prepareContamState]]), deserialized
+    * over the CAPPED index — see [[contamBloom]]), deserialized
     * from its 1-row checkpoint and returned WITH the cap it was built at
     * (the persisted derived cap — the pair [[graft.dedup.Dedup
     * .incrementalContamination]]'s bloom parameter now requires, so a
@@ -4467,7 +4316,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * probes of the same state (the incremental query + the guarded
     * pipeline) parse the hex once, while a state rebuilt in place under
     * a changed source still re-reads (the same staleness key
-    * `prepareContamState` itself rebuilds on). Bounded by a synchronized
+    * the state itself rebuilds on). Bounded by a synchronized
     * insertion-order LRU (evicts only the OLDEST entry — the old
     * size-then-clear wiped hot entries and raced concurrent rebuilds). */
   private val bloomMemo = new java.util.LinkedHashMap[
@@ -4478,9 +4327,8 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
   }
   private[queries] def contamStateBloom(s: org.apache.spark.sql.SparkSession,
                                         d: String): (org.apache.spark.util.sketch.BloomFilter, Int) = {
-    prepareContamState(s, d)
-    val key = (contamBloomPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+    contamBloom.ensure(s, d)
+    val key = (contamBloom.path(s, d), contamBloom.fingerprint(d))
     val hit = bloomMemo.synchronized(bloomMemo.get(key))
     if (hit != null) hit
     else {
@@ -4492,7 +4340,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
       // both deserialize the same checkpoint).
       val v = (graft.functions.BloomFunctions.fromHex(
           s.read.parquet(key._1).head().getString(0)),
-        contamDerivedCap(s, d))
+        contamCap.readLong(s, d).toInt)
       bloomMemo.synchronized {
         val raced = bloomMemo.get(key)
         if (raced != null) raced else { bloomMemo.put(key, v); v }
@@ -4500,202 +4348,89 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     }
   }
 
-  /** One-time bucketed CTAS of the TEST SUITE's distinct 3-shingles
-    * (test_id, shingle, df), bucketed on shingle — the probe-join key of
-    * incremental decontamination. Per-shingle doc frequency is computed
-    * ONCE here (the window rides the CTAS's own bucketing shuffle) and
-    * stored as an index column, so every later probe applies the cap as
-    * a scan predicate instead of re-windowing |state| per refresh. Two
-    * derived layout statistics persist beside the index: the df cap
-    * (greatest(8, 4 · mean test-side df) — 1-row checkpoint, like every
-    * other derived cap) and the capped index's shingle Bloom filter
-    * (1% fpp, hex-serialized 1-row checkpoint) that prefilters each
-    * increment's shingles in their scan stage. */
-  def prepareContamState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val te = Tables.documents(s, d).filter(col("doc_id") % 2 === 1)
-    // "|v2": the df-column schema change must rebuild a v1 index.
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet") + "|v2"
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      te.select(col("doc_id").as("test_id"),
-        explode(graft.dedup.Dedup.distinctShingles(col("text"), 3)).as("shingle"))
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle"))),
-      contamStateTable(d), Seq("shingle"), srcFingerprint = fp)
-    graft.ops.ScaleOps.ensureSortedByLazy(s, contamCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp)(
-      s.table(contamStateTable(d))
-        .agg(greatest(lit(8L),
-          expr("4 * count(1) div count(DISTINCT shingle)")).as("derived_cap")))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, contamBloomPath(s, d),
-      "bloom_hex", numFiles = 1, srcFingerprint = fp) {
-      val cap = s.read.parquet(contamCapPath(s, d)).head().getLong(0)
-      val keys = s.table(contamStateTable(d))
-        .filter(col("df") <= cap).select(col("shingle")).distinct()
-      val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)
-      import s.implicits._
-      Seq(graft.functions.BloomFunctions.toHex(bf)).toDF("bloom_hex")
-    }
-  }
-
-  private[graft] def cosineStateTable(sfDir: String): String =
-    s"graft_dd_cosinestate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def cosineCapPath(s: org.apache.spark.sql.SparkSession,
-                                     d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_cosinecap_$tag").toString
-  }
-
-  private[queries] def cosineDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                        d: String): Int = {
-    prepareCosineState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, cosineCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")).toInt
-  }
-
   /** One-time bucketed CTAS of the accepted set's sign-LSH bucket rows
-    * (vec_id, tb_key), bucketed on tb_key — the probe-join key — plus
-    * the derived verdict-path bucket cap (the lshCapPath policy applied
-    * to the embedding modality). */
-  def prepareCosineState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val state = Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2)
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      graft.dedup.Dedup.cosineBucketKeys(state, "vec_id", "embedding"),
-      cosineStateTable(d), Seq("tb_key"), srcFingerprint = fp)
-    graft.ops.ScaleOps.ensureSortedByLazy(s, cosineCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
-      tailAwareCapDf(stateBucketSizes(s, cosineStateTable(d), "tb_key"), 16L))
+    * (vec_id, tb_key), bucketed on tb_key — the probe-join key. */
+  private val cosineState = bucketedState("dd_cosinestate", embSrc, Seq("tb_key")) { (s, d) =>
+    graft.dedup.Dedup.cosineBucketKeys(
+      Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2), "vec_id", "embedding")
   }
 
-  /** pg_incremental_pagerank's persisted EDGE state table: the accepted
-    * corpus's symmetrized near-dup edges, bucketed AND sorted on `src`
-    * — the probe-join column of every PageRank superstep, so the
-    * |E|-sized frame rides its layout through every refresh round with
-    * no exchange. */
-  private[graft] def pgEdgeStateTable(sfDir: String): String =
-    s"graft_pg_edges_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  /** The triangle closes' pair state: the canonical (src < dst) edge
-    * set, bucketed+sorted on the composite (src, dst) close-join key
-    * (the src-bucketed adjacency cannot serve those joins
-    * exchange-free — requireAllClusterKeysForCoPartition). Derived
-    * from [[pgEdgeStateTable]] at prep time; |E| rows. */
-  private[graft] def pgPairStateTable(sfDir: String): String =
-    s"graft_pg_pairs_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  /** pg_incremental_pagerank's persisted RANK state path (one row per
-    * state-graph node, the 6-decimal checkpoint the refresh seeds
-    * from). */
-  private[graft] def rankStatePath(s: org.apache.spark.sql.SparkSession,
-                                   d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_pg_ranks_$tag").toString
+  /** The derived verdict-path bucket cap ([[lshCap]]'s policy applied to
+    * the embedding modality). */
+  private val cosineCap = sortedState("dd_cosinecap", embSrc, "derived_cap", "|p99") { (s, d) =>
+    tailAwareCapDf(bucketSizes(cosineState.read(s, d), "tb_key"), 16L)
   }
 
-  /** pg_incremental_triangles' persisted COUNT state path (one row per
-    * state-graph node in >= 1 triangle — the additive checkpoint the
-    * delta decomposition merges into). */
-  private[queries] def triangleStatePath(s: org.apache.spark.sql.SparkSession,
-                                         d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_pg_tris_$tag").toString
-  }
-
-  /** One-time triangle-count checkpoint over EXACTLY the persisted edge
-    * state ("count once, maintain forever") — computed from the state
-    * table itself so checkpoint and edges can never drift. Shares the
-    * edge-state CTAS with pg_incremental_pagerank: one graph, two
-    * maintained signals (rank + local clustering). Idempotent per
-    * (path, documents fingerprint). */
-  def prepareTriangleState(s: org.apache.spark.sql.SparkSession,
-                           d: String): Unit = {
-    preparePageRankState(s, d)
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    // The closes' pair state: the canonical id-sorted edge set,
-    // bucketed AND sorted on the closes' composite join key (src, dst)
-    // — see Triangles.incrementalPerNodeCounts' 4-arg doc for why the
-    // src-bucketed adjacency cannot serve these joins exchange-free.
-    // Bucket count derived from the pair state's own size (the layout
-    // contract — keys, sort, sizing policy — rides graft.layout, so the
-    // old hand-written "|src,dst" fingerprint bump is retired).
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      s.table(pgEdgeStateTable(d)).filter(col("src") < col("dst")),
-      pgPairStateTable(d), Seq("src", "dst"), srcFingerprint = fp)
-    // BY-NAME frame: perNodeCounts is lazy, but keep the lazy variant
-    // for freshness-check symmetry with the rank state.
-    graft.ops.ScaleOps.ensureSortedByLazy(s, triangleStatePath(s, d),
-      "id", numFiles = 1, srcFingerprint = fp)(
-      graft.graph.Triangles.perNodeCounts(
-        s.table(pgEdgeStateTable(d)).filter(col("src") < col("dst"))
-          .select(col("src").as("id1"), col("dst").as("id2"))))
-  }
-
-  /** One-time edge-state CTAS + from-uniform rank trajectory over it
-    * ("rank once, refresh forever"): the edge state is the bucketed
-    * symmetrized near-dup graph of the accepted docs, and the rank
-    * state is pageRank(3 supersteps) over EXACTLY that table — computed
-    * from the persisted frame, so seed and state can never drift.
-    * Idempotent per (table/path, documents fingerprint). */
-  def preparePageRankState(s: org.apache.spark.sql.SparkSession,
-                           d: String): Unit = {
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
+  /** pg_incremental_pagerank's persisted EDGE state: the accepted
+    * corpus's symmetrized near-dup edges, bucketed on `src` — the
+    * probe-join column of every PageRank superstep, so the |E|-sized
+    * frame rides its layout through every refresh round with no
+    * exchange — and sorted on BOTH keys (r16 advisory): the triangle
+    * closes are sort-merge joins on (src, dst), and a src-only sort
+    * spec made every refresh pay two full-state per-partition sorts.
+    * Keys, sort and the derived bucket count ride the graft.layout
+    * property, so ANY layout change rebuilds. */
+  private val pgEdgeState = state("pg_edges", docsSrc, bucketed = true) { (t, s, d) =>
     val (built, _) = graft.ops.ScaleOps.ensureBucketedDerived(
       graft.graph.PageRank.symmetrize(
         graft.dedup.Dedup.minhashNearDupsMd5(
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
           "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)),
-      // Sorted on BOTH keys (r16 advisory): the triangle closes are
-      // sort-merge joins on (src, dst), and a src-only sort spec made
-      // every refresh pay two full-state per-partition sorts. The old
-      // "|src,dst" fingerprint bump is retired — keys/sort/count now
-      // ride the graft.layout property, so ANY layout change rebuilds
-      // (stale generations are ops_state_gc's to collect). The bucket
-      // count is derived from the edge state's own staged size.
-      pgEdgeStateTable(d), Seq("src"), srcFingerprint = fp,
+      t.name(d), Seq("src"), srcFingerprint = t.fingerprint(d),
       sortCols = Seq("src", "dst"))
-    // The `symmetric = true` waiver below rests on "the edge table IS a
-    // symmetrize() CTAS" — but every LATER call reads the table back, so
-    // the claim is checked ONCE per fingerprint, where the table is
-    // written (see PageRank.assertNoDangles).
+    // The `symmetric = true` waiver of the rank state rests on "the edge
+    // table IS a symmetrize() CTAS" — but every LATER call reads the
+    // table back, so the claim is checked ONCE per fingerprint, where
+    // the table is written (see PageRank.assertNoDangles).
     if (built)
-      graft.graph.PageRank.assertNoDangles(s.table(pgEdgeStateTable(d)),
-        s"edge state ${pgEdgeStateTable(d)}")
-    // symmetric = true: the edge table IS a symmetrize() CTAS (just
-    // above, dst ⊆ src asserted at build), so the dangle guard is
-    // waived by construction — the same waiver pg_pagerank takes on its
-    // inline symmetrize output.
-    val builtRank = graft.ops.ScaleOps.ensureSortedByLazy(s, rankStatePath(s, d),
-      "id", numFiles = 1, srcFingerprint = fp)(
-      graft.graph.PageRank.pageRank(s.table(pgEdgeStateTable(d)),
+      graft.graph.PageRank.assertNoDangles(s.table(t.name(d)), s"edge state ${t.name(d)}")
+  }
+
+  /** pg_incremental_pagerank's persisted RANK state (one row per
+    * state-graph node, the 6-decimal checkpoint the refresh seeds from):
+    * pageRank(3 supersteps) over EXACTLY the edge state ("rank once,
+    * refresh forever"), so seed and state can never drift. */
+  private val pgRankState = state("pg_ranks", docsSrc) { (t, s, d) =>
+    // symmetric = true: the edge table IS a symmetrize() CTAS (dst ⊆ src
+    // asserted at build), so the dangle guard is waived by construction
+    // — the same waiver pg_pagerank takes on its inline symmetrize output.
+    val built = graft.ops.ScaleOps.ensureSortedByLazy(s, t.path(s, d),
+      "id", numFiles = 1, srcFingerprint = t.fingerprint(d))(
+      graft.graph.PageRank.pageRank(pgEdgeState.read(s, d),
         iters = 3, damping = 0.85, roundTo = 6, symmetric = true))
-    // pageRank persisted the BARE edge-table scan for its supersteps
-    // ("pagerank-edges"). Build-scoped only: left in the CacheManager it
-    // shadows every later `s.table(edge state)` scan of the session with
+    // pageRank memoized its superstep inputs over the edge-table scan
+    // ("pagerank-edges", "pagerank-deg"). Build-scoped only: a persisted
+    // bare scan left in the CacheManager would shadow every later
+    // `s.table(edge state)` scan of the session with
     // an InMemoryRelation, whose scan forgets the table's bucketing —
     // the probe joins then re-shuffle the state side and the
     // exchange-free REQUIREs fail (first seen as pg_incremental_triangles
     // failing in any FRESH-warehouse session, invisible in warm ones
-    // where built = false and pageRank never ran).
-    if (builtRank) {
+    // where the rank state is fresh and pageRank never ran).
+    if (built) {
       graft.ops.CacheOnce.release("pagerank-edges")
       graft.ops.CacheOnce.release("pagerank-deg")
     }
   }
 
-  /** One-time bucketed CTAS of dd_incremental's digest state
-    * (idempotent, catalog-keyed) — called from SparkEntry.prepare so
-    * Bench pays the write OUTSIDE the timed body ("write once,
-    * anti-join forever"); the query also self-prepares for standalone
-    * runs. */
-  def prepareDedupState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-        .select(md5(col("text")).as("content_hash")).distinct(),
-      dedupStateTable(d), Seq("content_hash"),
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+  /** The triangle closes' pair state: the canonical (src < dst) edge
+    * set, bucketed+sorted on the composite (src, dst) close-join key
+    * (the src-bucketed adjacency cannot serve those joins
+    * exchange-free — requireAllClusterKeysForCoPartition; see
+    * Triangles.incrementalPerNodeCounts' 4-arg doc). |E| rows. */
+  private val pgPairState = bucketedState("pg_pairs", docsSrc, Seq("src", "dst")) { (s, d) =>
+    pgEdgeState.read(s, d).filter(col("src") < col("dst"))
+  }
+
+  /** pg_incremental_triangles' persisted COUNT state (one row per
+    * state-graph node in >= 1 triangle — the additive checkpoint the
+    * delta decomposition merges into), computed from the edge state
+    * itself so checkpoint and edges can never drift ("count once,
+    * maintain forever"). */
+  private val triangleState = sortedState("pg_tris", docsSrc, "id") { (s, d) =>
+    graft.graph.Triangles.perNodeCounts(
+      pgEdgeState.read(s, d).filter(col("src") < col("dst"))
+        .select(col("src").as("id1"), col("dst").as("id2")))
+  }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.EntityResolution
+import graft.ops.{EntityResolution, StateTable}
 
 /** Entity resolution / record linkage (§2.13): a dirty customer feed —
   * every entity arrives twice, the second copy case-drifted, typo'd or
@@ -22,7 +22,7 @@ import graft.ops.EntityResolution
   * class: a digits-only key (survives case/punctuation) and a
   * (nation, digit-prefix) key (survives truncation) — the standard
   * multi-pass blocking argument, made checkable. */
-object EntityQueries {
+object EntityQueries extends StateTable.Registry {
 
   private val erBlockCap = 32
 
@@ -171,62 +171,17 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
       .map(bk => k.select(col("rid"), bk.as("bkey")))
       .reduce(_.unionByName(_))
 
-  private[queries] def erKeyStateTable(d: String): String =
-    s"graft_er_keys_${d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
+  private val customer = Seq("customer.parquet")
 
-  private[queries] def erClusterStatePath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_cc_$tag").toString
-  }
-
-  /** Full-corpus cluster map, persisted once per customer fingerprint
-    * ("cluster once, elect forever"): er_survivorship's input — its
-    * own surface is the ELECTION window, not the clustering, which
-    * er_clusters exercises live and er_incremental_clusters maintains
-    * incrementally. */
-  private[queries] def erFullClusterPath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_cc_full_$tag").toString
-  }
-
-  /** er_incremental_survivorship's persisted CANONICAL map over the
-    * day-1 cluster state — one (cluster_id, canonical_rid,
-    * canonical_name) row per state cluster, elected once at state-build
-    * time; increments re-elect only the clusters they dirty. */
-  private[queries] def erSurvStatePath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_surv_$tag").toString
-  }
-
-  def prepareErSurvState(s: SparkSession, d: String): Unit = {
-    prepareErState(s, d)
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erSurvStatePath(s, d),
-      "cluster_id", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))(
-      EntityResolution.survivorship(
-        s.read.parquet(erClusterStatePath(s, d))
-          .join(keyedRecords(s, d).select(col("rid").as("node"), col("name")),
-            Seq("node"))
-          .select(col("cluster_id"), col("node").as("rid"), col("name")),
-        "rid", "cluster_id",
-        preference = when(col("name").rlike("^Customer#[0-9]+$"), 0).otherwise(1))
-        .select(col("cluster_id"), col("rid").as("canonical_rid"),
-          col("name").as("canonical_name")))
-  }
-
-  def prepareErFullClusters(s: SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erFullClusterPath(s, d),
-      "node", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))(
-      graft.dedup.Dedup.connectedComponents(matches(s, d), ("rid1", "rid2")))
-
-  private[queries] def erCapPath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_cap_$tag").toString
+  /** One-time bucketed CTAS of the ACCEPTED entities' blocking keys
+    * (rid, bkey, bsz — bucketed on bkey, the probe-join column; bsz is
+    * the block size, windowed ONCE here so cap filters are scan
+    * predicates instead of per-probe windows); each increment then
+    * probes without ever re-blocking the stock. "|v2": the bsz-column
+    * schema change must rebuild a v1 key state. */
+  private val erKeys = bucketedState("er_keys", customer, Seq("bkey"), "|v2") { (s, d) =>
+    passKeyRows(keyedRecords(s, d).filter(!incPred)).withColumn("bsz", count(lit(1)).over(
+      org.apache.spark.sql.expressions.Window.partitionBy("bkey")))
   }
 
   /** The persisted derived block cap — greatest(floor, mult · mean state
@@ -234,44 +189,48 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     * state-build time and read back O(1) per probe (the LSH/SimHash/
     * cosine families' cap convention; previously st_er_probe re-derived
     * it over the whole state per run). */
-  private[queries] def erStateCap(s: SparkSession, d: String): Long = {
-    prepareErState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, erCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))
+  private val erCap = sortedState("er_cap", customer, "derived_cap", "|v2") { (s, d) =>
+    erKeys.read(s, d)
+      .agg(greatest(lit(erBlockCap.toLong),
+        expr(s"$erCapMeanMult * count(1) div count(DISTINCT bkey)"))
+        .as("derived_cap"))
   }
 
-  /** One-time bucketed CTAS of the ACCEPTED entities' blocking keys
-    * (rid, bkey, bsz — bucketed on bkey, the probe-join column; bsz is
-    * the block size, windowed ONCE here so cap filters are scan
-    * predicates instead of per-probe windows) and one-time clustering
-    * of their match graph; each increment then probes/merges without
-    * ever re-blocking or re-clustering the stock. The derived block cap
-    * persists beside the state as a 1-row checkpoint ([[erStateCap]]).
-    * Same idempotent fingerprint convention as the dedup states. */
-  def prepareErState(s: SparkSession, d: String): Unit = {
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")
+  /** One-time clustering of the accepted entities' match graph; each
+    * increment merges into it without re-clustering the stock. */
+  private val erClusters = sortedState("er_cc", customer, "node") { (s, d) =>
     val stateK = keyedRecords(s, d).filter(!incPred)
-    // "|v2": the bsz-column schema change must rebuild a v1 key state.
-    // Bucket count derived from the key state's own staged size
-    // (ScaleOps.ensureBucketedDerived — the verdict-17 layout policy).
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      passKeyRows(stateK).withColumn("bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("bkey"))),
-      erKeyStateTable(d), Seq("bkey"), srcFingerprint = fp + "|v2")
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|v2")(
-      s.table(erKeyStateTable(d))
-        .agg(greatest(lit(erBlockCap.toLong),
-          expr(s"$erCapMeanMult * count(1) div count(DISTINCT bkey)"))
-          .as("derived_cap")))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erClusterStatePath(s, d),
-      "node", numFiles = 1, srcFingerprint = fp)(
-      graft.dedup.Dedup.connectedComponents(
-        EntityResolution.verifyByEditDistance(
-          EntityResolution.blockedCandidates(stateK, "rid",
-            passKeys = EntityResolution.blockPassKeys(col("nation"), col("digits"))),
-          stateK, "rid", "norm", Seq("nation"), maxDist = 1),
-        ("rid1", "rid2")))
+    graft.dedup.Dedup.connectedComponents(
+      EntityResolution.verifyByEditDistance(
+        EntityResolution.blockedCandidates(stateK, "rid",
+          passKeys = EntityResolution.blockPassKeys(col("nation"), col("digits"))),
+        stateK, "rid", "norm", Seq("nation"), maxDist = 1),
+      ("rid1", "rid2"))
+  }
+
+  /** Full-corpus cluster map, persisted once per customer fingerprint
+    * ("cluster once, elect forever"): er_survivorship's input — its
+    * own surface is the ELECTION window, not the clustering, which
+    * er_clusters exercises live and er_incremental_clusters maintains
+    * incrementally. */
+  private val erFullClusters = sortedState("er_cc_full", customer, "node") { (s, d) =>
+    graft.dedup.Dedup.connectedComponents(matches(s, d), ("rid1", "rid2"))
+  }
+
+  /** er_incremental_survivorship's persisted CANONICAL map over the
+    * day-1 cluster state — one (cluster_id, canonical_rid,
+    * canonical_name) row per state cluster, elected once at state-build
+    * time; increments re-elect only the clusters they dirty. */
+  private val erSurv = sortedState("er_surv", customer, "cluster_id") { (s, d) =>
+    EntityResolution.survivorship(
+      erClusters.read(s, d)
+        .join(keyedRecords(s, d).select(col("rid").as("node"), col("name")),
+          Seq("node"))
+        .select(col("cluster_id"), col("node").as("rid"), col("name")),
+      "rid", "cluster_id",
+      preference = when(col("name").rlike("^Customer#[0-9]+$"), 0).otherwise(1))
+      .select(col("cluster_id"), col("rid").as("canonical_rid"),
+        col("name").as("canonical_name"))
   }
 
   private def matches(s: SparkSession, d: String): DataFrame = {
@@ -355,15 +314,16 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // representatives + one broadcast state remap). The oracle is the
     // FULL re-cluster over the complete match graph.
     Q("er_incremental_clusters", erIncClustersOracleSql) { (s, d) =>
-      prepareErState(s, d)
+      val keys = erKeys.read(s, d)
+      val clusters = erClusters.read(s, d)
       // Watch registered BEFORE the truncation below: the er-inc-updated
       // materialization executes the key-state probe as an EAGER job at
       // plan build (survivorship's precedent).
-      graft.plans.PlanChecks.watchFinalPlans(s, erKeyStateTable(d), "ER key state")
+      graft.plans.PlanChecks.watchFinalPlans(s, erKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
-      val crossCands = s.table(erKeyStateTable(d)).hint("merge")
+      val crossCands = keys.hint("merge")
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -382,7 +342,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.ops.CacheOnce.swapTruncated("er-inc-updated:" +
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          s.read.parquet(erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
+          clusters, pairs, ("rid1", "rid2"),
           memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -401,15 +361,17 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // cap-aware oracle reproduces. er_blocking_audit still reports the
     // cap and the uncapped volume per pass.
     Q("er_incremental_clusters_capped", erIncClustersCappedOracleSql) { (s, d) =>
-      prepareErState(s, d)
+      val keys = erKeys.read(s, d)
+      val cap = erCap.readLong(s, d)
+      val clusters = erClusters.read(s, d)
       // Watch registered BEFORE the truncation below (survivorship's
       // precedent: the materialization executes the probe eagerly).
-      graft.plans.PlanChecks.watchFinalPlans(s, erKeyStateTable(d), "ER key state")
+      graft.plans.PlanChecks.watchFinalPlans(s, erKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
-      val crossCands = s.table(erKeyStateTable(d)).hint("merge")
-        .filter(col("bsz") <= erStateCap(s, d))
+      val crossCands = keys.hint("merge")
+        .filter(col("bsz") <= cap)
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -426,7 +388,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped:" +
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          s.read.parquet(erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
+          clusters, pairs, ("rid1", "rid2"),
           memoTag = ":er-capped:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -463,12 +425,12 @@ stc AS (SELECT rid, bkey FROM
 inc AS (SELECT rid, bkey FROM p WHERE (rid // 2) % 3 = 2)
 SELECT DISTINCT stc.rid AS state_rid, inc.rid AS inc_rid
 FROM stc JOIN inc ON stc.bkey = inc.bkey""") { (s, d) =>
-      prepareErState(s, d)
+      erKeys.ensure(s, d)
       // Cap read from its state-build checkpoint (O(1)); the block sizes
       // were windowed into the state at CTAS — nothing state-sized is
       // recomputed per probe. Same value the in-plan derivation produced.
-      graft.streaming.ErProbe.candidatesOnce(s, d, erKeyStateTable(d),
-        persistedCap = Some(("bsz", erStateCap(s, d))))
+      graft.streaming.ErProbe.candidatesOnce(s, d, erKeys.name(d),
+        persistedCap = Some(("bsz", erCap.readLong(s, d))))
     },
 
     // Survivorship: per entity cluster, elect the canonical record by a
@@ -482,9 +444,8 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       CASE WHEN regexp_full_match(k.name, 'Customer#[0-9]+') THEN 0 ELSE 1 END,
       k.rid) AS rn
   FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
-      prepareErFullClusters(s, d)
       val k = keyedRecords(s, d)
-      val clustered = s.read.parquet(erFullClusterPath(s, d))
+      val clustered = erFullClusters.read(s, d)
         .join(k.select(col("rid").as("node"), col("name")), Seq("node"))
         .select(col("cluster_id"), col("node").as("rid"), col("name"))
       EntityResolution.survivorship(clustered, "rid", "cluster_id",
@@ -514,17 +475,19 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       CASE WHEN regexp_full_match(k.name, 'Customer#[0-9]+') THEN 0 ELSE 1 END,
       k.rid) AS rn
   FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
-      prepareErState(s, d); prepareErSurvState(s, d)
+      val keys = erKeys.read(s, d)
+      val state = erClusters.read(s, d)
+      val survState = erSurv.read(s, d)
       // Registered BEFORE the merge builds: the er-inc-updated
       // truncation executes the key-state probe as an EAGER job at
       // plan build, so the watch must already be live to cover it
       // (standalone runs don't get er_incremental_clusters' own
       // registration).
-      graft.plans.PlanChecks.watchFinalPlans(s, erKeyStateTable(d), "ER key state")
+      graft.plans.PlanChecks.watchFinalPlans(s, erKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
-      val crossCands = s.table(erKeyStateTable(d)).hint("merge")
+      val crossCands = keys.hint("merge")
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -535,7 +498,6 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       val pairs = EntityResolution.verifyByEditDistance(
         crossCands.unionByName(selfCands).distinct(),
         k, "rid", "norm", Seq("nation"), maxDist = 1)
-      val state = s.read.parquet(erClusterStatePath(s, d))
       // shared key with er_incremental_clusters: one merged map per
       // session no matter which of the two queries runs first.
       // TRUNCATED: the merged map is referenced by changed (x1), dirty
@@ -555,7 +517,6 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
         .union(changed.filter(col("_old").isNotNull)
           .select(col("_old").as("cluster_id")))
         .distinct()
-      val survState = s.read.parquet(erSurvStatePath(s, d))
       val untouched = survState
         .join(broadcast(dirty), Seq("cluster_id"), "left_anti")
       val reElected = EntityResolution.survivorship(

@@ -23,7 +23,7 @@ object ErProbe {
   /** One AvailableNow drain of the customer increment (custkey % 3 = 2;
     * both dirty copies of an entity derive in-stream) against
     * `stateTable` ((rid, bkey) bucketed on bkey — written by
-    * EntityQueries.prepareErState). Returns the settled DISTINCT
+    * the er_keys state in EntityQueries). Returns the settled DISTINCT
     * candidate pairs (state_rid, inc_rid). `blockCap` is the same
     * collision budget as the batch blocking pass and st_lsh_probe's
     * bandBucketCap: a state bucket above the cap is degenerate dirt
@@ -40,7 +40,7 @@ object ErProbe {
     * capped. `persistedCap` = (bszCol, cap) is the O(1) shape of the
     * same bound: the block size was windowed INTO the state at build
     * time and the cap read back from its 1-row checkpoint
-    * (EntityQueries.erStateCap), so the filter is a scan predicate and
+    * (the er_cap state in EntityQueries), so the filter is a scan predicate and
     * nothing state-sized is recomputed per probe. The three cap modes
     * are mutually exclusive. */
   def candidatesOnce(spark: SparkSession, sfDir: String,

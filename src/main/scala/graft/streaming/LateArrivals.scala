@@ -106,11 +106,9 @@ object LateArrivals {
     * code changes — or a parameter change would silently replay a
     * stale staging. */
   private[streaming] def eventsTag(name: String, sfDir: String,
-                                   params: String): (String, String) = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    (s"${name}_$tag",
+                                   params: String): (String, String) =
+    (s"${name}_${graft.ops.StateGc.tagOf(sfDir)}",
       graft.ops.ScaleOps.fileFingerprint(s"$sfDir/events.parquet") + ":" + params)
-  }
 
   /** Append-mode watermarked day tally over a staged directory, drained
     * with AvailableNow one file per micro-batch. Emitted rows = windows

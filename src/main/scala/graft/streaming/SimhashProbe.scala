@@ -25,7 +25,7 @@ object SimhashProbe {
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
   /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
-    * `stateTable` (written by prepareSimhashState: (doc_id, sig_hi,
+    * `stateTable` (written by the SimHash state build: (doc_id, sig_hi,
     * sig_lo, mkey) bucketed on mkey). Returns the settled DISTINCT
     * verified pairs (state_id, inc_id, hamming).
     *

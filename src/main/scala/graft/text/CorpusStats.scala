@@ -315,7 +315,12 @@ object CorpusStats {
     * caps shingle document frequency per side (boilerplate/stop-phrase
     * shingles would otherwise fan the join quadratically). Returns
     * (train_id, test_id, train_start, test_start, span_tokens) for
-    * spans of at least `minSpanTokens` tokens. */
+    * spans of at least `minSpanTokens` tokens.
+    *
+    * PRECONDITION: `idCol` is unique within each side. (id, pos) is then
+    * unique per side, which is what lets the match set skip a distinct;
+    * two docs sharing an id would merge their positions and break the
+    * one-row-per-position island arithmetic. */
   def verbatimSpans(train: DataFrame, test: DataFrame, idCol: String,
                     textCol: String, k: Int = 4, minSpanTokens: Int = 8,
                     maxDocFreq: Option[Int] = None,
